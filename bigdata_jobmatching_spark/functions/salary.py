@@ -53,9 +53,12 @@ def _to_number(s: Column) -> Column:
 
 
 def detect_currency(text: Column) -> Column:
+    """Deviation from extract_salary.py:127-142: the euro token is
+    anchored (``\\beur\\b``, here and in ``hasc``), so words ending in
+    "-eur" (Développeur, Auditeur, Ingénieur) name no currency."""
     low = F.lower(F.coalesce(text, F.lit("")))
     return (
-        F.when(low.rlike(r"(€|euro|eur\b)"), F.lit("EUR"))
+        F.when(low.rlike(r"(€|euro|\beur\b)"), F.lit("EUR"))
         .when(low.rlike(r"(\$|usd|dollar)"), F.lit("USD"))
         .when(low.rlike(r"(fcfa|f cfa|xof|francs?)"), F.lit("FCFA"))
         .otherwise(F.lit("FCFA"))
@@ -146,7 +149,7 @@ def parse_salary(text: Column) -> Column:
     bound = F.struct(
         detect_currency(t).alias("cur"),
         detect_period(t).alias("per"),
-        F.lower(t).rlike(r"(fcfa|f cfa|xof|€|euro|eur\b|\$|usd|francs?)").alias("hasc"),
+        F.lower(t).rlike(r"(fcfa|f cfa|xof|€|euro|\beur\b|\$|usd|francs?)").alias("hasc"),
         _to_number(F.regexp_extract(t, _RANGE_PAT, 1)).alias("lo_raw"),
         _to_number(F.regexp_extract(t, _RANGE_PAT, 2)).alias("hi_raw"),
         _to_number(F.regexp_extract(t, _SINGLE_PAT, 1)).alias("single_raw"),

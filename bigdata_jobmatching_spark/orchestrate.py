@@ -7,7 +7,9 @@ in strict mode when a required stage produced nothing
 (processing_spark_dag.py:55-88). Parity needs the SEMANTICS, not
 Airflow: a stage-function driver that lands every intermediate as
 parquet (so any stage can be re-run or inspected independently, like
-the reference's lake layout) and the same count-based gate.
+the reference's lake layout) and the same count-based gate, reading
+only file metadata like the reference's: every landed count (gate, WAP
+row floors, match_lakes) comes from parquet footers, not a re-read.
 
 At scale the stage landings are the checkpoint/restart story: each
 stage is a pure function of the previous stage's parquet, so a failed
@@ -18,13 +20,15 @@ chain.
 from __future__ import annotations
 
 import json
-from pathlib import Path
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .plans import domain_pipeline as P
+from .sources import versioned as V
 from .sources.io import write_stage
+from .sources.manifest import audit_then_publish, committed, landed
 
 # stage name -> required in the quality gate (the reference marks only
 # the parse landing as required; enrichments are optional directories)
@@ -39,26 +43,20 @@ WAREHOUSE_TABLES = ("fact_offres", "dim_entreprise", "dim_localisation", "dim_co
 
 
 def quality_check(spark: SparkSession, out_dir: str, strict: bool = True) -> dict:
-    """File+row counts per stage directory; strict mode raises when a
-    required stage is empty (processing_spark_dag.py:55-88 semantics,
-    with row counts added — file existence alone passes on an empty
-    parquet write). Versioned directories (a ``_CURRENT`` pointer)
-    are counted at their CURRENT version only — orphaned staged
-    versions (failed WAP audits) don't inflate the stats."""
-    from .sources import versioned as V
-
+    """File+row counts per stage directory, read from the parquet
+    footers (metadata only, like the reference's gate: no Spark job);
+    strict mode raises when a required stage is empty
+    (processing_spark_dag.py:55-88 semantics, with row counts added —
+    file existence alone passes on an empty parquet write). Versioned
+    directories (a ``_CURRENT`` pointer) are counted at their CURRENT
+    version only — orphaned staged versions (failed WAP audits) don't
+    inflate the stats."""
     stats: dict[str, dict] = {}
     problems: list[str] = []
     for name, required in STAGES + tuple((f"warehouse/{t}", True) for t in WAREHOUSE_TABLES):
-        d = Path(out_dir) / name
-        if (d / "_CURRENT").exists():
-            v = V.current_version(str(d))
-            vdir = d / f"v{v:05d}"
-            files = len(list(vdir.rglob("*.parquet")))
-            rows = V.read_version(spark, str(d)).count() if files else 0
-        else:
-            files = len(list(d.rglob("*.parquet"))) if d.exists() else 0
-            rows = spark.read.parquet(str(d)).count() if files else 0
+        d = os.path.join(out_dir, name)
+        v = V.current_version(d)
+        files, rows = landed(d if v is None else os.path.join(d, f"v{v:05d}"))
         stats[name] = {"required": required, "files": files, "rows": rows}
         if required and rows == 0:
             problems.append(name)
@@ -67,15 +65,16 @@ def quality_check(spark: SparkSession, out_dir: str, strict: bool = True) -> dic
     return stats
 
 
-def _row_floor_audit(name: str, min_rows: int):
-    """WAP veto: a stage that produced fewer than ``min_rows`` rows
-    must not publish (the reference's file-count check upgraded to a
-    real gate on the staged bytes)."""
+def _row_floor_audit(root: str, min_rows: int):
+    """WAP veto: a table that staged fewer than ``min_rows`` rows must
+    not publish (the reference's file-count check upgraded to a real
+    gate on the staged bytes). Rows come from the footers of the
+    staged version, the newest under ``root`` until it publishes."""
     def audit(staged: DataFrame) -> None:
-        n = staged.count()
+        _, n = landed(os.path.join(root, f"v{V.list_versions(root)[-1]:05d}"))
         if n < min_rows:
-            raise ValueError(
-                f"WAP veto for {name}: {n} rows < floor {min_rows}")
+            raise ValueError(f"WAP veto for {os.path.basename(root)}: "
+                             f"{n} rows < floor {min_rows}")
     return audit
 
 
@@ -84,8 +83,6 @@ def _fact_fk_audit(spark: SparkSession, wh_dir: str):
     just-published dim versions (the fk_integrity_audit pre-flight,
     run against the exact bytes readers would see). Dims are
     broadcast-joined — at 100 TB the fact never shuffles for this."""
-    from .sources import versioned as V
-
     def audit(staged_fact: DataFrame) -> None:
         dims = {
             t: V.read_version(spark, f"{wh_dir}/{t}")
@@ -143,8 +140,6 @@ def publish_warehouse_wap(
     The fact keeps the warehouse layout (partition by publication
     date + cluster-key sortWithinPartitions, create_tables.sql:91-92
     parity) and every table carries a file-stats manifest."""
-    from .sources.manifest import audit_then_publish
-
     versions: dict[str, int] = {}
     dim_pks = {
         "dim_entreprise": "entreprise_id",
@@ -154,7 +149,7 @@ def publish_warehouse_wap(
     for name, pk in dim_pks.items():
         versions[name] = audit_then_publish(
             tables[name], f"{wh_dir}/{name}",
-            audits=[_row_floor_audit(name, 1)],
+            audits=[_row_floor_audit(f"{wh_dir}/{name}", 1)],
             stats_cols=(pk,),
         )
     fact = tables["fact_offres"].sortWithinPartitions(
@@ -162,7 +157,7 @@ def publish_warehouse_wap(
     versions["fact_offres"] = audit_then_publish(
         fact, f"{wh_dir}/fact_offres",
         audits=[
-            _row_floor_audit("fact_offres", min_fact_rows),
+            _row_floor_audit(f"{wh_dir}/fact_offres", min_fact_rows),
             _fact_fk_audit(spark, wh_dir),
         ],
         stats_cols=("entreprise_id",),
@@ -183,31 +178,29 @@ def run_staged_pipeline(
     whose _SUCCESS marker already committed (same restart discipline
     as the corpus chain — every stage is deterministic, so a resumed
     run cannot fork)."""
-    from pathlib import Path
+    def skip(name: str) -> bool:
+        return resume and committed(f"{out_dir}/{name}")
 
-    def committed(name: str) -> bool:
-        return resume and (Path(out_dir) / name / "_SUCCESS").exists()
-
-    if not committed("jobs_parsed"):
+    if not skip("jobs_parsed"):
         write_stage(P.normalize_offers(raw_offers),
                     f"{out_dir}/jobs_parsed", ("source",))
 
-    if not committed("skills_enriched"):
+    if not skip("skills_enriched"):
         with_skills = P.extract_skills(
             spark, spark.read.parquet(f"{out_dir}/jobs_parsed"))
         write_stage(with_skills, f"{out_dir}/skills_enriched", ("source",))
 
-    if not committed("salaries_enriched"):
+    if not skip("salaries_enriched"):
         with_salary = P.enrich_salary(
             spark.read.parquet(f"{out_dir}/skills_enriched"))
         write_stage(with_salary, f"{out_dir}/salaries_enriched", ("source",))
 
-    if not committed("deduplicated"):
+    if not skip("deduplicated"):
         deduped = P.dedup_offers(
             spark.read.parquet(f"{out_dir}/salaries_enriched"))
         write_stage(deduped, f"{out_dir}/deduplicated", ("source",))
 
-    if not committed("sectors_enriched"):
+    if not skip("sectors_enriched"):
         with_sectors = P.enrich_sectors(
             spark, spark.read.parquet(f"{out_dir}/deduplicated"))
         write_stage(with_sectors, f"{out_dir}/sectors_enriched", ("source",))
@@ -293,9 +286,7 @@ def match_lakes(
         spark.read.parquet(f"{out_dir}/matching_scores"), k=top_k
     )
     write_stage(top, f"{out_dir}/top_matches", ())
-    n_scores = spark.read.parquet(f"{out_dir}/matching_scores").count()
-    n_top = spark.read.parquet(f"{out_dir}/top_matches").count()
-    return {"matching_scores": n_scores, "top_matches": n_top}
+    return {t: landed(f"{out_dir}/{t}")[1] for t in ("matching_scores", "top_matches")}
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -17,14 +17,15 @@ shuffle (the dedup joins are banded — see operators/dedup.py).
 from __future__ import annotations
 
 import json
-from pathlib import Path
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions import text as X
 from .operators import dedup as D
-from .sources.io import write_stage, write_stage_observed
+from .sources.io import write_stage_observed
+from .sources.manifest import committed, landed
 
 _EMAIL_RE = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
 _PHONE_RE = "\\+?[0-9]{2,3}([ .-][0-9]{2,4}){3,4}"
@@ -252,19 +253,18 @@ def corpus_gate(
 ) -> dict:
     """Row counts per stage; strict mode enforces that every stage is
     non-empty AND that the filter/dedup stages are monotone
-    non-increasing (a dedup that GREW the corpus is a bug).
+    non-increasing (a dedup that GREW the corpus is a bug). Landed
+    counts come from parquet footers: the gate runs no Spark job.
 
     ``observed`` carries the in-flight ``df.observe()`` metrics from
     the write pass; the gate cross-checks them against the landed
-    parquet counts, so a partial/lost write (observed N, landed < N)
+    footer counts, so a partial/lost write (observed N, landed < N)
     fails loudly instead of silently shipping a truncated corpus."""
     stats: dict[str, dict] = {}
     problems: list[str] = []
     rows_seq: list[int] = []
     for name in stages:
-        d = Path(out_dir) / name
-        files = len(list(d.rglob("*.parquet"))) if d.exists() else 0
-        rows = spark.read.parquet(str(d)).count() if files else 0
+        files, rows = landed(os.path.join(out_dir, name))
         stats[name] = {"files": files, "rows": rows}
         if observed and name in observed:
             obs_rows = observed[name]["n_rows"]
@@ -284,13 +284,6 @@ def corpus_gate(
     if strict and problems:
         raise ValueError(f"corpus gate: {problems}")
     return stats
-
-
-def _stage_complete(out_dir: str, name: str) -> bool:
-    """A stage directory is resumable iff its write COMMITTED: the
-    partitioned layout puts _SUCCESS at the stage root. A crashed or
-    in-flight write has files but no marker and is redone."""
-    return (Path(out_dir) / name / "_SUCCESS").exists()
 
 
 def run_corpus_pipeline(
@@ -330,7 +323,7 @@ def run_corpus_pipeline(
     obs: dict[str, dict] = {}
 
     def stage(name: str, build, partition_by: tuple[str, ...], metrics=None):
-        if resume and _stage_complete(out_dir, name):
+        if resume and committed(f"{out_dir}/{name}"):
             return  # gate recounts landed rows; no observed entry
         obs[name] = write_stage_observed(
             build(), f"{out_dir}/{name}", partition_by, metrics=metrics

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .manifest import data_files
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -202,8 +204,9 @@ def compact_stage(
     import uuid
 
     df = spark.read.parquet(path)
-    n_before = len([f for f in _list_parquet_files(path)])
-    total_bytes = sum(os.path.getsize(f) for f in _list_parquet_files(path))
+    files = data_files(path)
+    n_before = len(files)
+    total_bytes = sum(os.path.getsize(os.path.join(path, f)) for f in files)
     n_files = max(1, int(total_bytes / (target_file_mb * 1024 * 1024)) or 1)
     out = df.coalesce(n_files)
     if cluster_by:
@@ -212,18 +215,8 @@ def compact_stage(
     out.write.mode("overwrite").parquet(tmp)
     shutil.rmtree(path)
     os.rename(tmp, path)
-    n_after = len([f for f in _list_parquet_files(path)])
+    n_after = len(data_files(path))
     return {"files_before": n_before, "files_after": n_after, "bytes": total_bytes}
-
-
-def _list_parquet_files(path: str) -> list[str]:
-    out = []
-    for root, _dirs, files in os.walk(path):
-        out.extend(
-            os.path.join(root, f) for f in files
-            if f.endswith(".parquet") and not f.startswith(".")
-        )
-    return out
 
 
 def write_orc_stage(

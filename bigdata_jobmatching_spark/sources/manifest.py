@@ -64,23 +64,47 @@ def _ser_stat(v):
     raise TypeError(f"stat value not JSON-serializable: {type(v)}")
 
 
-def _walk_parquet(vdir: str) -> list[str]:
-    """Relative paths of every data file under the version dir —
-    flat or hive-partitioned (``col=value/`` subdirs) layouts alike."""
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule: "." or "_" (bar "_col=value") hides a path."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def data_files(root: str) -> list[str]:
+    """Sorted relative paths of the parquet data files Spark reads
+    under ``root``, flat or hive-partitioned. Hidden paths
+    (``_temporary/`` write leftovers, ``.``-files) are skipped as Spark
+    skips them; a missing root holds none."""
     out = []
-    for base, _dirs, names in os.walk(vdir):
+    for base, dirs, names in os.walk(root):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
         for name in names:
-            if name.endswith(".parquet"):
-                rel = os.path.relpath(os.path.join(base, name), vdir)
+            if name.endswith(".parquet") and not _hidden(name):
+                rel = os.path.relpath(os.path.join(base, name), root)
                 out.append(rel.replace(os.sep, "/"))
     return sorted(out)
+
+
+def landed(root: str) -> tuple[int, int]:
+    """(data files, rows) landed under ``root``, the rows summed from
+    the parquet footers: no Spark job, no data read."""
+    import pyarrow.parquet as pq
+
+    files = data_files(root)
+    rows = sum(pq.read_metadata(os.path.join(root, f)).num_rows for f in files)
+    return len(files), rows
+
+
+def committed(stage_dir: str) -> bool:
+    """True iff the write under ``stage_dir`` committed (Spark's root
+    ``_SUCCESS``); a crashed or in-flight write is redone on resume."""
+    return os.path.exists(os.path.join(stage_dir, "_SUCCESS"))
 
 
 def _collect_file_stats(vdir: str, stats_cols: tuple[str, ...]) -> list[dict]:
     import pyarrow.parquet as pq
 
     entries = []
-    for name in _walk_parquet(vdir):
+    for name in data_files(vdir):
         path = os.path.join(vdir, name)
         md = pq.read_metadata(path)
         stats: dict[str, dict] = {}
@@ -203,8 +227,7 @@ def audit_then_publish(
         w = w.partitionBy(*partition_by)
     w.parquet(vdir)
     # read back under the writer's declared schema: an EMPTY staged
-    # write (zero files) must reach the audits as an empty frame so
-    # the row-floor veto fires — not die in schema inference
+    # write (zero files) reaches the audits as an empty frame
     staged = df.sparkSession.read.schema(df.schema).parquet(vdir)
     for audit in audits:
         audit(staged)  # raises -> staged dir stays unpublished
@@ -339,7 +362,7 @@ def _collect_file_blooms(
     import pyarrow.parquet as pq
 
     out: dict[str, dict[str, dict]] = {}
-    for name in _walk_parquet(vdir):
+    for name in data_files(vdir):
         path = os.path.join(vdir, name)
         cols: dict[str, dict] = {}
         for col in bloom_cols:

@@ -166,12 +166,6 @@ def rollback(root: str, version: int) -> None:
     publish(root, version)
 
 
-def _is_complete(root: str, version: int) -> bool:
-    """A version directory whose Spark write finished carries the
-    _SUCCESS marker; a crashed/in-flight write does not."""
-    return os.path.isfile(os.path.join(root, f"v{version:05d}", "_SUCCESS"))
-
-
 def vacuum(
     root: str, keep: int = 2, grace_seconds: float = 3600.0
 ) -> list[int]:
@@ -190,9 +184,11 @@ def vacuum(
     not vacuum (every version would look in-flight forever — safe,
     never wrong, but nothing incomplete is ever reclaimed).
     Returns the deleted version numbers."""
+    from .manifest import committed
+
     cur = current_version(root)
     vs = list_versions(root)
-    complete = [v for v in vs if _is_complete(root, v)]
+    complete = [v for v in vs if committed(os.path.join(root, f"v{v:05d}"))]
     keep_set = set(complete[-keep:]) if keep > 0 else set()
     if cur is not None:
         keep_set.add(cur)

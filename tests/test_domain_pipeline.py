@@ -263,6 +263,46 @@ def test_staged_pipeline_driver_and_quality_gate(spark, raw, tmp_path):
         O.quality_check(spark, str(tmp_path / "nowhere"), strict=True)
 
 
+def test_quality_gate_reads_footers_only(spark, raw, tmp_path):
+    """The gate counts from parquet metadata, like the reference's
+    file-count gate: it runs no Spark job, and each stage's files and
+    rows are what Spark itself reads, even beside a ``_temporary/``
+    write leftover and a ``.``-file, which Spark skips."""
+    import shutil
+
+    from bigdata_jobmatching_spark import orchestrate as O
+    from bigdata_jobmatching_spark.sources import versioned as V
+
+    lake = str(tmp_path / "lake")
+    stats = O.run_staged_pipeline(spark, raw, lake)
+    d = tmp_path / "lake" / "skills_enriched"
+    part = next(d.rglob("part-*.parquet"))
+    (d / "_temporary" / "0").mkdir(parents=True)
+    shutil.copy(part, d / "_temporary" / "0" / "part-x.parquet")
+    shutil.copy(part, d / ".x.parquet")
+
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    gate, n_gate_jobs = jobs_of("gate-footers", lambda: O.quality_check(spark, lake))
+    assert n_gate_jobs == 0
+    assert gate == stats
+    for name, s in gate.items():
+        df = (V.read_version(spark, f"{lake}/{name}") if name.startswith("warehouse/")
+              else spark.read.parquet(f"{lake}/{name}"))
+        n, n_jobs = jobs_of(f"gate-spark-{name}", df.count)
+        assert n_jobs > 0  # the job count above can see a count
+        assert (s["files"], s["rows"]) == (len(df.inputFiles()), n), name
+
+
 def test_corpus_pipeline_end_to_end(spark, tmp_path):
     # the training-corpus chain: filter -> exact dedup -> near dedup ->
     # scrub -> split+pack, with planted exact and near duplicates that
@@ -304,6 +344,22 @@ def test_corpus_pipeline_end_to_end(spark, tmp_path):
     )
     for r in bins.collect():
         assert r.lo == 0 and r.n == r.hi + 1
+
+
+def test_corpus_gate_rejects_observed_rows_not_landed(spark, tmp_path):
+    # a write pass that observed more rows than its footers hold lost
+    # data between the observation and the landing: the gate must fail
+    from bigdata_jobmatching_spark import orchestrate_corpus as OC
+
+    out = str(tmp_path / "corpus")
+    spark.range(5).withColumn("source", F.lit("a")).write.partitionBy(
+        "source").parquet(f"{out}/filtered")
+    stats = OC.corpus_gate(spark, out, observed={"filtered": {"n_rows": 5}},
+                           stages=("filtered",))
+    assert stats["filtered"]["rows"] == stats["filtered"]["observed_rows"] == 5
+    with pytest.raises(ValueError, match="landed 5 rows but the write pass observed 6"):
+        OC.corpus_gate(spark, out, observed={"filtered": {"n_rows": 6}},
+                       stages=("filtered",))
 
 
 def test_html_cascade_comments_cdata_mojibake(spark):

@@ -112,6 +112,23 @@ def test_salary_parse_range_fcfa(spark):
     assert rows[3].min_fcfa is None and rows[3].confidence == 0.0
 
 
+def test_salary_eur_is_a_whole_word(spark):
+    # French roles ending in "-eur" name no currency: the stated FCFA
+    # range stays FCFA; a standalone EUR token still converts
+    texts = [
+        f"{role} chez Orange a Abidjan. Salaire: 270 000 - 450 000 FCFA par mois."
+        for role in ("Développeur", "Auditeur", "Ingénieur")
+    ] + ["2000 EUR par an", "environ 36000 EUR par an"]
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    rows = df.select(salary.parse_salary(F.col("t")).alias("s")).select("s.*").collect()
+    for r in rows[:3]:
+        assert (r.currency, r.min_fcfa, r.max_fcfa) == ("FCFA", 270000.0, 450000.0)
+        assert r.confidence == 0.9
+    for r, amount in zip(rows[3:], (2000, 36000)):
+        assert r.currency == "EUR" and r.period == "year"
+        assert r.min_fcfa == amount * 655.0 / 12.0
+
+
 def test_fingerprint_order_invariant(spark):
     df = spark.createDataFrame([("alpha beta gamma",), ("gamma  beta   ALPHA",)], "t string")
     out = [r.f for r in df.select(X.fingerprint(F.col("t")).alias("f")).collect()]

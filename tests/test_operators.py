@@ -394,12 +394,13 @@ def test_compact_stage_merges_small_files(spark, sf_dir, tmp_path):
     """Lake maintenance: a fragmented stage (32 shuffle-partition
     files) compacts to a handful, preserving every row and the schema;
     cluster_by lands sorted files so min/max stats prune row groups."""
-    from bigdata_jobmatching_spark.sources.io import compact_stage, _list_parquet_files
+    from bigdata_jobmatching_spark.sources.io import compact_stage
+    from bigdata_jobmatching_spark.sources.manifest import data_files
 
     src = load_table(spark, sf_dir, "orders")
     p = str(tmp_path / "frag")
     src.repartition(32).write.parquet(p)
-    assert len(_list_parquet_files(p)) >= 32
+    assert len(data_files(p)) >= 32
     before = src.count()
     stats = compact_stage(spark, p, target_file_mb=128, cluster_by=("o_orderdate",))
     assert stats["files_before"] >= 32
